@@ -121,19 +121,12 @@ def write_local_bench(
     errors: dict[str, str],
     sf: float | None,
     path: Path | None = None,
-    floors_cold: dict[str, float] | None = None,
 ) -> Path:
     """Persist the UNTRIMMED sweep: full per-query timings and two-pass
     floors for every query. The stdout line is budget-trimmed for the
     driver's tail (r11 dropped 16 sweep entries and cut qmin to 5), so
     this file is the only place round-over-round floor-vs-floor deltas
-    stay possible for the whole surface (r11 verdict item 2).
-
-    ``floors_cold`` (r17, verdict item 10): memo-backed queries' floors
-    are cache-hit numbers (q196 floored at 0.23 s in r16 — a memo
-    artifact that flagged a phantom 7x round-over-round swing), so the
-    local file additionally records a memos-cleared-per-run floor for
-    exactly those queries. Stdout line unchanged."""
+    stay possible for the whole surface (r11 verdict item 2)."""
     path = path or local_bench_path()
     payload = {
         "metric": "total_query_wall_seconds",
@@ -145,10 +138,6 @@ def write_local_bench(
         "floors": {n: round(t, 3) for n, t in sorted(floor.items())},
         "errors": dict(errors),
     }
-    if floors_cold:
-        payload["floors_cold"] = {
-            n: round(t, 3) for n, t in sorted(floors_cold.items())
-        }
     path.write_text(json.dumps(payload, indent=1) + "\n")
     return path
 
@@ -273,31 +262,8 @@ def main() -> None:
     # the most expensive queries' floors are the last to go.
     keep = [*top10, *material][:12]
 
-    # Cold floors for memo-backed queries (r17, verdict item 10): their
-    # two-pass floors are per-application cache hits, so round-over-round
-    # floor diffs on them flag phantom swings. One extra memos-cleared
-    # run per memo-backed query, recorded ONLY in the untrimmed local
-    # file — the stdout line and every existing field are untouched.
-    floors_cold: dict[str, float] = {}
     try:
-        from salesanalytics_etl_spark.operators.memo import (
-            clear_materialize_memos,
-        )
-        from salesanalytics_etl_spark.plans.registry import MEMO_BACKED
-
-        for name in sorted(set(MEMO_BACKED) & set(timings)):
-            clear_materialize_memos()
-            try:
-                floors_cold[name] = time_one(name)
-            except Exception:
-                pass
-        clear_materialize_memos()
-    except Exception:
-        pass  # cold floors are diagnostics; never cost the driver's line
-
-    try:
-        write_local_bench(timings, floor, errors, sf,
-                          floors_cold=floors_cold)
+        write_local_bench(timings, floor, errors, sf)
     except OSError:
         pass  # read-only checkout must never cost the driver its line
     print(format_bench_line(timings, floor, keep, sf, errors))

@@ -4,8 +4,7 @@
 The second ANN scale path beside hyperplane LSH (similarity.py):
 
 1. Fit the quantizer on a BOUNDED deterministic sample of the corpus (the
-   standard IVF practice — a quantizer does not need every vector), cached
-   per (applicationId, cache_key) so repeated calls never re-fit. The
+   standard IVF practice — a quantizer does not need every vector). The
    driver holds only sample_cap×dim floats during the fit and the k×dim
    centroid matrix after.
 2. Assign every corpus vector to its nearest centroid — one vectorized
@@ -35,10 +34,6 @@ N_PROBE = 4
 SEED = 42
 SAMPLE_CAP = 4096
 
-# (applicationId, cache_key) -> centroid matrix. Keyed on applicationId —
-# not id(spark), which CPython can reuse after a session is GC'd.
-_CENTROID_CACHE: dict[tuple[str, str], np.ndarray] = {}
-
 
 def _spherical_kmeans(sample: np.ndarray, k: int, iters: int = 8) -> np.ndarray:
     """Deterministic Lloyd's on the unit sphere (assign by max dot,
@@ -62,18 +57,8 @@ def _spherical_kmeans(sample: np.ndarray, k: int, iters: int = 8) -> np.ndarray:
 
 
 def _fit_centroids(
-    spark,
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    cache_key: str | None,
+    corpus: DataFrame, id_col: str, vec_col: str, k: int
 ) -> np.ndarray:
-    if cache_key is not None:
-        key = (spark.sparkContext.applicationId, f"{cache_key}:{vec_col}:{k}")
-        hit = _CENTROID_CACHE.get(key)
-        if hit is not None:
-            return hit
     n = corpus.count()
     step = max(1, n // SAMPLE_CAP)
     # hash-stride sample: deterministic across partitionings/sessions,
@@ -91,10 +76,7 @@ def _fit_centroids(
     if len(pdf) == 0:  # belt-and-braces: tiny corpora or extreme skew
         pdf = corpus.select(vec_col).limit(SAMPLE_CAP).toPandas()
     sample = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    centroids = _spherical_kmeans(sample, k)
-    if cache_key is not None:
-        _CENTROID_CACHE[key] = centroids
-    return centroids
+    return _spherical_kmeans(sample, k)
 
 
 def _assign_udf(centroids: np.ndarray, n_nearest: int):
@@ -116,7 +98,6 @@ def _assign_udf(centroids: np.ndarray, n_nearest: int):
 
 
 def cosine_topk_ivf(
-    spark,
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
@@ -124,14 +105,10 @@ def cosine_topk_ivf(
     n_probe: int = N_PROBE,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via IVF probing. Output matches
-    cosine_topk_bruteforce's schema; ties broken by neighbor_id.
-
-    ``cache_key`` (e.g. the source directory) memoizes the fitted
-    quantizer for the life of the Spark application."""
-    centroids = _fit_centroids(spark, corpus, id_col, vec_col, n_clusters, cache_key)
+    cosine_topk_bruteforce's schema; ties broken by neighbor_id."""
+    centroids = _fit_centroids(corpus, id_col, vec_col, n_clusters)
 
     c_assign = _assign_udf(centroids, 1)
     q_assign = _assign_udf(centroids, n_probe)
@@ -168,8 +145,6 @@ def cosine_topk_ivf(
 
 
 def assign_clusters(
-    spark,
-    cache_key: str,
     corpus: DataFrame,
     n_clusters: int = N_CLUSTERS,
     id_col: str = "vec_id",
@@ -177,15 +152,13 @@ def assign_clusters(
 ) -> DataFrame:
     """Hard-assign every vector to its nearest quantizer centroid.
 
-    Returns the corpus columns + (cluster, centroid_sim). Reuses the
-    sample-fit, per-(application, cache_key) cached centroids — the same
-    quantizer the IVF search path probes, so cluster profiles and ANN
-    share one model. One Arrow-batched matmul per batch, no shuffle.
+    Returns the corpus columns + (cluster, centroid_sim). Fits the same
+    sample-fit quantizer the IVF search path probes, so cluster profiles
+    and ANN share one model. One Arrow-batched matmul per batch, no
+    shuffle.
     """
 
-    centroids = _fit_centroids(
-        spark, corpus, id_col, vec_col, n_clusters, cache_key
-    )
+    centroids = _fit_centroids(corpus, id_col, vec_col, n_clusters)
 
     @F.pandas_udf("cluster int, centroid_sim double")
     def assign(vecs: pd.Series) -> pd.DataFrame:
@@ -260,17 +233,21 @@ def portable_cell_assignment(
 
     NB the anchor collect makes plan CONSTRUCTION eager: anchors are
     frozen at build time; a genuinely EMPTY corpus yields zero anchors —
-    returned as an empty result rather than letting ``F.greatest()``
-    blow up with no arguments. A degenerate ``n_cells <= 0`` on the
-    other hand raises loudly (the repo convention: silent-empty results
-    hide parameter bugs). ``anchor_rows`` lets a caller that already
+    returned as an empty result rather than letting ``greatest()`` blow
+    up with no arguments. A degenerate ``n_cells <= 0`` on the other
+    hand raises loudly (the repo convention: silent-empty results hide
+    parameter bugs). ``anchor_rows`` lets a caller that already
     collected the anchor frame (cosine_topk_ivf_portable probes the
     same anchors) thread it through instead of re-deriving it — one
     corpus sample scan instead of two.
     """
     import math
 
-    from salesanalytics_etl_spark.operators.similarity import _dot, _norm
+    from salesanalytics_etl_spark.operators.similarity import (
+        _dot_literal_sql,
+        _norm,
+        _sql_double,
+    )
 
     if n_cells <= 0:
         raise ValueError(f"n_cells must be positive, got {n_cells}")
@@ -290,111 +267,27 @@ def portable_cell_assignment(
     # the same left-to-right float64 accumulation + IEEE sqrt as the
     # F.aggregate form, so the quotient is bit-identical while the
     # expression tree shrinks ~3× (16 norm-aggregates of 64-literal
-    # arrays were pure compile/eval overhead)
-    from salesanalytics_etl_spark.operators.dedup import spread_partitions
-
-    # spread the corpus scan before the argmax projection: a single-file
-    # scan runs the n_cells x dim dot products on ONE task (r17; the
-    # q24/q190 lesson — plan-metadata guard, no-op on wide sources)
-    c = spread_partitions(corpus, by=id_col).select(
+    # arrays were pure compile/eval overhead). The argmax is built as
+    # ONE SQL string — one py4j call, where a Column per anchor
+    # component costs a round trip per literal.
+    c = corpus.select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("c_vec")
     ).withColumn("_cn", _norm(F.col("c_vec")))
     cands = []
     for r in rows:
-        anorm = math.sqrt(sum((float(x) * float(x) for x in r.a_vec), 0.0))
-        dot = _dot(F.col("c_vec"), F.array(*[F.lit(float(x)) for x in r.a_vec]))
+        vals = [float(x) for x in r.a_vec]
+        anorm = math.sqrt(sum((x * x for x in vals), 0.0))
         cands.append(
-            F.struct(
-                F.round(dot / (F.col("_cn") * F.lit(anorm)), 6).alias("s"),
-                F.lit(-int(r.anchor_id)).cast("long").alias("nid"),
-            )
+            f"named_struct('s', round({_dot_literal_sql('c_vec', vals)}"
+            f" / (_cn * {_sql_double(anorm)}), 6),"
+            f" 'nid', cast({-int(r.anchor_id)} as bigint))"
         )
-    best = cands[0] if len(cands) == 1 else F.greatest(*cands)
-    return c.withColumn("_b", best).select(
+    best = cands[0] if len(cands) == 1 else f"greatest({', '.join(cands)})"
+    return c.withColumn("_b", F.expr(best)).select(
         "cid",
         (-F.col("_b.nid")).cast("long").alias("cell"),
         F.col("_b.s").alias("cell_sim"),
     )
-
-
-from salesanalytics_etl_spark.operators.memo import record_sources, register_memo
-
-_ASSIGNMENT_MEMO: dict[tuple, DataFrame] = register_memo({})
-_ANCHORS_MEMO: dict[tuple, list] = register_memo({})
-
-
-def _portable_anchors_cached(
-    corpus: DataFrame, n_cells: int, id_col: str, vec_col: str
-) -> list:
-    """Collect-once seam for :func:`_portable_anchors`: the anchor sample
-    is a corpus scan + n_cells-row collect consumed by BOTH the probe
-    side of :func:`cosine_topk_ivf_portable` and the assignment argmax
-    (:func:`portable_cell_assignment`) — without this, one cold IVF call
-    derived it twice (correct — the md5-smallest sample is deterministic
-    — but one whole extra corpus scan). Keyed like the assignment memo;
-    the cached value is the BOUNDED anchor row list (n_cells rows), so
-    no checkpoint is needed. Same immutable-input contract as every
-    semanticHash-keyed memo (``operators/memo.py``)."""
-    key = (
-        corpus.sparkSession.sparkContext.applicationId,
-        corpus.semanticHash(),
-        n_cells,
-        id_col,
-        vec_col,
-    )
-    hit = _ANCHORS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    rows = _portable_anchors(corpus, n_cells, id_col, vec_col).collect()
-    _ANCHORS_MEMO[key] = rows
-    record_sources(_ANCHORS_MEMO, key, corpus)
-    while len(_ANCHORS_MEMO) > 4:
-        del _ANCHORS_MEMO[next(iter(_ANCHORS_MEMO))]
-    return rows
-
-
-def portable_cell_assignment_cached(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Materialize-once seam for :func:`portable_cell_assignment` (the
-    q109/q116 pattern applied to IVF): the corpus-scan argmax projection
-    is the dominant stage of all three portable-IVF consumers — the
-    replay join (q112), the cell-statistics report (q113), and the
-    recall audit (q122) — and a session running several recomputes it
-    per consumer. Keyed on (applicationId, semanticHash(corpus),
-    n_cells, id_col, vec_col); the checkpointed frame is (cid, cell,
-    cell_sim) — one narrow row per corpus vector. FIFO-bounded, oldest
-    evicted (dict insertion order, never popitem's LIFO).
-
-    semanticHash is PLAN identity, not DATA identity: inputs must be
-    immutable for the application's lifetime, or the caller must
-    ``memo.clear_materialize_memos()`` after overwriting them (see
-    ``operators/memo.py`` for the full contract)."""
-    key = (
-        corpus.sparkSession.sparkContext.applicationId,
-        corpus.semanticHash(),
-        n_cells,
-        id_col,
-        vec_col,
-    )
-    hit = _ASSIGNMENT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = portable_cell_assignment(
-        corpus,
-        n_cells,
-        id_col,
-        vec_col,
-        anchor_rows=_portable_anchors_cached(corpus, n_cells, id_col, vec_col),
-    ).localCheckpoint()
-    _ASSIGNMENT_MEMO[key] = out
-    record_sources(_ASSIGNMENT_MEMO, key, corpus)
-    while len(_ASSIGNMENT_MEMO) > 4:
-        del _ASSIGNMENT_MEMO[next(iter(_ASSIGNMENT_MEMO))]
-    return out
 
 
 def cosine_topk_ivf_portable(
@@ -425,23 +318,15 @@ def cosine_topk_ivf_portable(
     are proven identical on this surface — q27/q32).
 
     Scale: anchors are a bounded broadcast (n_cells rows); assignment is
-    one broadcast nested-loop over the corpus scan (n_cells sims/row,
-    no shuffle); the candidate join is an equi-join on cell id.
-
-    Memoized input contract: the anchor sample and cell assignment are
-    cached on plan identity — ``corpus``'s underlying files must not be
-    overwritten mid-application, else call
-    ``memo.clear_materialize_memos()`` first.
+    n_cells literal-anchor sims per row on the corpus scan (no shuffle);
+    the candidate join is an equi-join on cell id.
     """
     c = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("c_vec"))
-    # the anchor list is bounded (n_cells rows) and feeds the probe side;
-    # the collect itself is memoized, and the corpus ASSIGNMENT below
-    # consumes the SAME cached rows through its own memoized checkpoint —
-    # so q112/q113/q122 and repeat passes share one anchor-sample scan
-    # and one corpus argmax scan between them
-    anchor_rows = _portable_anchors_cached(corpus, n_cells, id_col, vec_col)
-    cells = portable_cell_assignment_cached(
-        corpus, n_cells, id_col, vec_col
+    # the anchor list is bounded (n_cells rows): collected once, it feeds
+    # both the probe side and the corpus assignment argmax
+    anchor_rows = _portable_anchors(corpus, n_cells, id_col, vec_col).collect()
+    cells = portable_cell_assignment(
+        corpus, n_cells, id_col, vec_col, anchor_rows=anchor_rows
     ).select("cid", "cell")
     anchors = corpus.sparkSession.createDataFrame(
         [(int(r.anchor_id), [float(x) for x in r.a_vec]) for r in anchor_rows],

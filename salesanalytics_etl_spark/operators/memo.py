@@ -1,162 +1,10 @@
-"""Registry for the materialize-once memos (banded signatures, IVF cell
-assignment / anchors, brute-force top-k ground truth).
-
-THE CONTRACT: every memo keys on ``DataFrame.semanticHash()`` — PLAN
-identity, not DATA identity. Within one Spark application, re-reading a
-path whose files were overwritten (e.g. after ``merge_upsert_table`` to
-the same table) produces the same plan hash, so a cached (checkpointed)
-frame from BEFORE the write would be silently served. The memoized
-operators therefore assume their inputs are immutable for the lifetime
-of the application — true for the registry's query surface (read-only
-``sf_dir`` tables) and for any append-only lakehouse layout, but NOT
-for in-session read-after-write pipelines.
-
-The framework's own mutation paths (``merge_upsert_table``,
-``merge_upsert_partitioned``, ``compact_partitions`` — see
-``operators/upsert.py``) invalidate automatically through
-:func:`invalidate_memos_for_path`, scoped to the mutated table via the
-file sources recorded at memo-set time (:func:`record_sources` — the
-sources must be captured from the INPUT frame before checkpointing,
-because a checkpointed frame's lineage, hence ``inputFiles()``, is
-gone). Entries whose sources are unknown are dropped too: unknown must
-fail safe. EXTERNAL writers (another process, a job this module never
-sees) still need the manual hook: call :func:`clear_materialize_memos`
-after mutating a table that a memoized operator has already scanned.
-The memos are per-process (driver-side dicts), so either invalidation
-is local and instantaneous — the checkpointed blocks are released on GC.
-"""
+"""Kept for callers of the former cross-query memo layer: no operator
+caches a result beyond the query that built it, so there is nothing to
+clear."""
 
 from __future__ import annotations
 
-_MEMOS: list[dict] = []
-
-# id(memo) -> {key: tuple of source file URIs recorded at set time}
-_SOURCES: dict[int, dict] = {}
-
-
-def register_memo(memo: dict) -> dict:
-    """Enroll a module-level memo dict so the global clear can reach it."""
-    _MEMOS.append(memo)
-    return memo
-
-
-def record_sources(memo: dict, key, *dfs) -> None:
-    """Record the file sources behind ``memo[key]`` AT SET TIME.
-
-    ``dfs`` must be the pre-checkpoint input frame(s) (a checkpointed
-    frame's plan is a scan of RDD blocks — ``inputFiles()`` returns
-    nothing). Failure to enumerate ANY input's sources records an EMPTY
-    tuple, which :func:`invalidate_memos_for_path` treats as "unknown:
-    drop" — an enumeration hiccup can only cost a recompute, never serve
-    stale data.
-    """
-    try:
-        files = tuple(f for df in dfs for f in df.inputFiles())
-    except Exception:
-        files = ()
-    srcs = _SOURCES.setdefault(id(memo), {})
-    srcs[key] = files
-    # prune records for keys the memo itself has evicted (FIFO bound),
-    # so a long session's source registry stays bounded with the memo
-    for k in list(srcs):
-        if k not in memo and k != key:
-            del srcs[k]
-
-
-def _canon_uri(uri: str) -> tuple[str, str, str]:
-    """(scheme, authority, absolute path) comparison key for a Hadoop
-    file URI or a bare local path — ``file:/x``, ``file:///x``,
-    ``hdfs://nn:8020/t``, ``s3a://bucket/t`` and plain ``/x`` all
-    canonicalize so that a source-file URI from ``inputFiles()`` and a
-    mutator-supplied table path match exactly when they name the same
-    filesystem object. (The earlier string-prefix form glued the URI
-    authority onto the path on one side while abspath'ing the scheme
-    into the path on the other, so no non-local deployment ever
-    matched and stale memos survived the very overwrite this hook
-    exists to catch.) Bare paths canonicalize as scheme ``file`` with
-    empty authority, matching Hadoop's local-FS URIs."""
-    import os
-    import posixpath
-    from urllib.parse import unquote, urlparse
-
-    p = urlparse(uri)
-    # require len > 1 so a windows-style drive letter never parses as a
-    # scheme; 'file' URIs carry an empty/localhost authority in practice
-    if len(p.scheme) > 1:
-        scheme = "file" if p.scheme == "file" else p.scheme
-        netloc = "" if scheme == "file" and p.netloc == "localhost" else p.netloc
-        # URI hosts are case-insensitive: lowercase the host but keep the
-        # port (and any userinfo) verbatim, so hdfs://NN:8020 == hdfs://nn:8020
-        if netloc:
-            userinfo, _, hostport = netloc.rpartition("@")
-            if hostport.startswith("["):
-                # bracketed IPv6 literal: the host runs to the closing
-                # ']'; partition(':') would stop at the first colon
-                # INSIDE the address and leave most of it un-folded
-                # (r14 ADVICE)
-                end = hostport.find("]") + 1 or len(hostport)
-                host, rest = hostport[:end], hostport[end:]
-            else:
-                host, colon, port = hostport.partition(":")
-                rest = colon + port
-            netloc = (userinfo + "@" if userinfo else "") + host.lower() + rest
-        # Hadoop's inputFiles() percent-encodes paths (space -> %20) while
-        # mutator-supplied paths are raw; decode so both forms match
-        path = posixpath.normpath("/" + unquote(p.path).lstrip("/"))
-        return (scheme, netloc, "/" if path == "/" else path.rstrip("/"))
-    return ("file", "", os.path.abspath(uri).rstrip("/") or "/")
-
-
-def invalidate_memos_for_path(path: str) -> int:
-    """Drop every memo entry that scanned files under ``path`` (plus any
-    entry with UNKNOWN sources — fail safe); returns entries dropped.
-
-    Called by the framework's own table mutators after an overwrite, so
-    in-session read-after-write pipelines are correct without the caller
-    remembering :func:`clear_materialize_memos` (r12 ADVICE). Entries
-    over OTHER tables survive — a MERGE into a staging table must not
-    cold-restart every memoized corpus operator in the session.
-    Matching is on the canonical (scheme, authority, path) triple, so
-    it works for local paths AND URI-addressed tables (hdfs/s3a/...,
-    the delta/object-store route).
-    """
-    t_scheme, t_auth, t_path = _canon_uri(path)
-    prefix = t_path.rstrip("/") + "/"
-    dropped = 0
-    for m in _MEMOS:
-        srcs = _SOURCES.get(id(m), {})
-        for k in list(m):
-            files = srcs.get(k, ())
-
-            def _under(f: str) -> bool:
-                s, a, pp = _canon_uri(f)
-                return (
-                    (s, a) == (t_scheme, t_auth)
-                    and (pp == t_path or pp.startswith(prefix))
-                )
-
-            hit = not files or any(_under(f) for f in files)
-            if hit:
-                del m[k]
-                srcs.pop(k, None)
-                dropped += 1
-    return dropped
-
 
 def clear_materialize_memos() -> int:
-    """Invalidate every materialize-once memo; returns entries dropped.
-
-    Call after overwriting a table (merge/compact/swap) that any
-    memoized operator — ``minhash_near_dupes_portable``,
-    ``lsh_bucket_audit``, ``cosine_topk_ivf_portable``,
-    ``portable_cell_assignment_cached``, ``cosine_topk_bruteforce_cached``
-    — may have scanned earlier in the session. See the module docstring
-    for why ``semanticHash`` cannot detect the overwrite itself. The
-    framework's own mutators invalidate automatically (scoped to the
-    mutated path); this global hook remains for EXTERNAL writers.
-    """
-    dropped = sum(len(m) for m in _MEMOS)
-    for m in _MEMOS:
-        m.clear()
-    _SOURCES.clear()
-    return dropped
+    """No-op; returns 0 entries dropped (no query result outlives its query)."""
+    return 0

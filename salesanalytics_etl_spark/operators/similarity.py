@@ -27,6 +27,7 @@ BLAS: dgemm reorders the accumulation.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -49,6 +50,29 @@ def _dot(a, b) -> Column:
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def _sql_double(x: float) -> str:
+    """Exact SQL DOUBLE literal for ``x``: ``repr`` round-trips every
+    finite double (subnormals and -0.0 included) and the ``D`` suffix
+    keeps it DOUBLE — a bare ``0.5`` would parse as DECIMAL."""
+    if math.isnan(x):
+        return "double('NaN')"
+    if math.isinf(x):
+        return "double('Infinity')" if x > 0 else "double('-Infinity')"
+    return f"{x!r}D"
+
+
+def _dot_literal_sql(col: str, values) -> str:
+    """SQL-string twin of ``_dot(F.col(col), F.array(*map(F.lit, values)))``
+    — the identical zip_with/aggregate shape over the same double
+    literals, so results are bit-identical, but built as ONE string
+    instead of a py4j round trip per component."""
+    arr = ", ".join(_sql_double(float(v)) for v in values)
+    return (
+        f"aggregate(zip_with({col}, array({arr}), "
+        "(x, y) -> cast(x as double) * y), 0D, (acc, v) -> acc + v)"
     )
 
 
@@ -241,51 +265,6 @@ def cosine_topk_bruteforce(
     )
 
 
-from salesanalytics_etl_spark.operators.memo import record_sources, register_memo
-
-_BRUTEFORCE_MEMO: dict[tuple, DataFrame] = register_memo({})
-
-
-def cosine_topk_bruteforce_cached(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Materialize-once seam for :func:`cosine_topk_bruteforce` (the
-    q109/q112 pattern): the exact top-k is the ground truth consumed by
-    the exact-ANN query (q27) AND both recall audits (q121 LSH, q122
-    IVF) with identical arguments — each was re-scoring the full corpus.
-    The checkpointed frame is k rows per query (bounded). Keyed on
-    (applicationId, semanticHash(corpus), semanticHash(queries), k,
-    cols); FIFO-bounded, oldest evicted.
-
-    semanticHash is PLAN identity, not DATA identity: inputs must be
-    immutable for the application's lifetime, or the caller must
-    ``memo.clear_materialize_memos()`` after overwriting them (see
-    ``operators/memo.py`` for the full contract)."""
-    key = (
-        corpus.sparkSession.sparkContext.applicationId,
-        corpus.semanticHash(),
-        queries.semanticHash(),
-        k,
-        id_col,
-        vec_col,
-    )
-    hit = _BRUTEFORCE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = cosine_topk_bruteforce(
-        corpus, queries, k, id_col, vec_col
-    ).localCheckpoint()
-    _BRUTEFORCE_MEMO[key] = out
-    record_sources(_BRUTEFORCE_MEMO, key, corpus, queries)
-    while len(_BRUTEFORCE_MEMO) > 4:
-        del _BRUTEFORCE_MEMO[next(iter(_BRUTEFORCE_MEMO))]
-    return out
-
-
 def _lsh_bucket(vec, planes: list[list[float]]) -> Column:
     """Sign-of-projection bucket id: bit p = (vec · plane_p) > 0."""
     bucket = F.lit(0).cast("long")
@@ -467,13 +446,13 @@ def quantization_error_audit(
 
     This is the audit a 100 TB ANN deployment runs before switching
     its scoring to int8 SIMD kernels: the ground-truth frame is the
-    memoized brute-force top-k (k rows per query, bounded), the
+    brute-force top-k (k rows per query, bounded), the
     quantized-code join touches the corpus once, map-side (the k·|Q|
     pair frame broadcasts), and every gate-surface number except the
     two 6dp cosines is an exact integer. |q_i| <= 127 and dim <= 2^16
     keep the dot products far inside bigint.
     """
-    gt = cosine_topk_bruteforce_cached(
+    gt = cosine_topk_bruteforce(
         corpus, queries, k, id_col=id_col, vec_col=vec_col
     )
     qq = queries.select(
@@ -552,9 +531,11 @@ def int8_topk_recall(
     is undefined). Same broadcast-queries/one-corpus-scan shape as the
     exact brute force; two-phase top-k; |queries| output rows.
     """
-    gt = cosine_topk_bruteforce_cached(
+    # checkpointed (k rows per query): the overlap semi-join and the
+    # query-id base below both consume it
+    gt = cosine_topk_bruteforce(
         corpus, queries, k, id_col=id_col, vec_col=vec_col
-    )
+    ).localCheckpoint()
     sq = lambda c: F.aggregate(  # noqa: E731
         F.transform(c, lambda x: x * x),
         F.lit(0).cast("long"),

@@ -307,23 +307,6 @@ def vacuum_stale_staging(path: str, min_age_seconds: float = 3600.0) -> bool:
         return False  # live writer owns the table (and its own cleanup)
 
 
-def _invalidate_memos(path: str) -> None:
-    """Drop materialize-once memo entries that scanned ``path`` — called
-    by every table mutator here AFTER its overwrite lands, so in-session
-    read-after-write pipelines never serve a pre-merge cached frame (the
-    memos key on plan identity, which cannot see a same-path overwrite —
-    r12 ADVICE; ``operators/memo.py`` has the full contract). Scoped by
-    the sources recorded at memo-set time: mutating a staging table must
-    not cold-restart every memoized corpus operator in the session. The
-    manual ``clear_materialize_memos`` hook remains for EXTERNAL writers
-    this module never sees."""
-    from salesanalytics_etl_spark.operators.memo import (
-        invalidate_memos_for_path,
-    )
-
-    invalidate_memos_for_path(path)
-
-
 def merge_upsert(
     target: DataFrame | None,
     incoming: DataFrame,
@@ -454,7 +437,6 @@ def merge_upsert_partitioned(
         n = _merge_upsert_partitioned_locked(
             spark, path, incoming, keys, partition_by
         )
-    _invalidate_memos(path)
     return n
 
 
@@ -629,7 +611,6 @@ def compact_partitions(
             partition_by,
             pinned,
         )
-    _invalidate_memos(path)
     return len(crowded)
 
 
@@ -804,7 +785,6 @@ def merge_upsert_table(
     """
     if table_format == "delta":
         merge_upsert_delta(spark, path, incoming, keys)
-        _invalidate_memos(path)
         return
     if table_format != "parquet":
         raise ValueError(
@@ -813,7 +793,7 @@ def merge_upsert_table(
         )
     if partition_by:
         merge_upsert_partitioned(spark, path, incoming, keys, partition_by)
-        return  # the partitioned path invalidates memos itself
+        return
     with single_writer_lock(path, owner="merge_upsert_table"):
         # A crash between the two renames below leaves the table
         # stranded in .__swap_old__ with `path` missing; repair BEFORE
@@ -822,7 +802,6 @@ def merge_upsert_table(
         _recover_swap_old(path)
         if not os.path.exists(path):
             incoming.write.parquet(path)
-            _invalidate_memos(path)
             return
         target = spark.read.schema(incoming.schema).parquet(path)
         merged = merge_upsert(target, incoming, keys)
@@ -839,4 +818,3 @@ def merge_upsert_table(
         os.rename(path, old)
         os.rename(staging, path)
         shutil.rmtree(old)
-    _invalidate_memos(path)

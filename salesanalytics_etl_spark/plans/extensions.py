@@ -18,39 +18,6 @@ from salesanalytics_etl_spark.plans.registry import register
 from salesanalytics_etl_spark.plans.queries import _t  # noqa: E402
 
 
-# q25's verified-pairs DataFrame is cached per (application, dir) so a
-# sweep over the whole surface computes signatures/banding once (q49's
-# clusters get the same treatment in _exact_clusters below — it stopped
-# consuming the MinHash pairs when its edges became exact). Keyed on
-# applicationId, not id(spark) — CPython can reuse a GC'd session's id,
-# which would hand back persisted frames bound to a dead SparkContext.
-# Bounded FIFO: in a long-lived service, unbounded entries would pin
-# persisted frames in executor memory forever; evicted entries unpersist.
-_MINHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_MINHASH_CACHE_MAX = 8
-
-
-def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from salesanalytics_etl_spark.operators.dedup import minhash_near_dupes
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MINHASH_PAIRS_CACHE:
-        while len(_MINHASH_PAIRS_CACHE) >= _MINHASH_CACHE_MAX:
-            # FIFO: evict the OLDEST insertion — dict.popitem() is LIFO
-            # and would thrash the newest entry while pinning stale ones
-            oldest = next(iter(_MINHASH_PAIRS_CACHE))
-            evicted = _MINHASH_PAIRS_CACHE.pop(oldest)
-            try:
-                evicted.unpersist()
-            except Exception:  # session may already be gone
-                pass
-        (documents,) = _t(spark, sf_dir, "documents")
-        _MINHASH_PAIRS_CACHE[key] = minhash_near_dupes(
-            documents, threshold=0.5
-        ).persist()
-    return _MINHASH_PAIRS_CACHE[key]
-
-
 # --------------------------------------------------------------------------
 # Text analysis
 # --------------------------------------------------------------------------
@@ -332,7 +299,10 @@ def q46_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "≥0.5 — shingle/signature/banding all JVM array expressions",
 )
 def q25_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_pairs(spark, sf_dir)
+    from salesanalytics_etl_spark.operators.dedup import minhash_near_dupes
+
+    (documents,) = _t(spark, sf_dir, "documents")
+    return minhash_near_dupes(documents, threshold=0.5)
 
 
 @register(
@@ -492,11 +462,7 @@ def q49_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_clusters(spark, sf_dir)
 
 
-# q49's exact clustering is consumed twice per sweep (q49 itself and
-# q105's representative pick) — same memoization as _minhash_pairs.
-_EXACT_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# q49's exact clustering, composed by q105, q166 and q191.
 def _exact_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.dedup import (
         jaccard_verify,
@@ -505,33 +471,23 @@ def _exact_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from salesanalytics_etl_spark.operators.graph import dedup_clusters
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EXACT_CLUSTERS_CACHE:
-        while len(_EXACT_CLUSTERS_CACHE) >= _MINHASH_CACHE_MAX:
-            oldest = next(iter(_EXACT_CLUSTERS_CACHE))  # FIFO, not popitem's LIFO
-            evicted = _EXACT_CLUSTERS_CACHE.pop(oldest)
-            try:
-                evicted.unpersist()
-            except Exception:  # session may already be gone
-                pass
-        (documents,) = _t(spark, sf_dir, "documents")
-        subset = documents.filter(F.col("doc_id") < 250)
-        sets = shingle_sets(shingle_rows(subset))
-        ids = subset.select(F.col("doc_id"))
-        pairs = (
-            ids.select(F.col("doc_id").alias("doc_a"))
-            .join(ids.select(F.col("doc_id").alias("doc_b")))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            # the pair list inherits the 1-file scan's partitioning;
-            # without a spread, every per-pair set intersection lands on
-            # one task
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-        edges = jaccard_verify(pairs, sets, threshold=0.5).select(
-            "doc_a", "doc_b"
-        )
-        _EXACT_CLUSTERS_CACHE[key] = dedup_clusters(edges).persist()
-    return _EXACT_CLUSTERS_CACHE[key]
+    (documents,) = _t(spark, sf_dir, "documents")
+    subset = documents.filter(F.col("doc_id") < 250)
+    sets = shingle_sets(shingle_rows(subset))
+    ids = subset.select(F.col("doc_id"))
+    pairs = (
+        ids.select(F.col("doc_id").alias("doc_a"))
+        .join(ids.select(F.col("doc_id").alias("doc_b")))
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        # the pair list inherits the 1-file scan's partitioning;
+        # without a spread, every per-pair set intersection lands on
+        # one task
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    edges = jaccard_verify(pairs, sets, threshold=0.5).select("doc_a", "doc_b")
+    # connected_components solves eagerly (driver union-find, or a
+    # checkpointed propagation), so consumers re-read a materialized frame
+    return dedup_clusters(edges)
 
 
 @register(
@@ -554,12 +510,12 @@ def _exact_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q27_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.similarity import (
-        cosine_topk_bruteforce_cached,
+        cosine_topk_bruteforce,
     )
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 10)
-    return cosine_topk_bruteforce_cached(embeddings, queries, k=5)
+    return cosine_topk_bruteforce(embeddings, queries, k=5)
 
 
 @register(
@@ -644,7 +600,7 @@ def q34_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 10)
-    return cosine_topk_ivf(spark, embeddings, queries, k=5, cache_key=sf_dir)
+    return cosine_topk_ivf(embeddings, queries, k=5)
 
 
 @register(
@@ -2250,7 +2206,7 @@ def q88_lang_metadata_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,
     doc="KMeans(16) cluster profile of the embedding corpus: per-cluster "
     "size, mean intra-cluster cosine to the centroid, and dominant label "
-    "— reuses the IVF coarse quantizer (sample-fit, cached per app/dir); "
+    "— reuses the IVF coarse quantizer (sample-fit); "
     "iterative fit -> rows-only for the gate, semantics pinned by the "
     "IVF planted-cluster unit tests",
 )
@@ -2260,7 +2216,7 @@ def q89_embedding_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.ivf import assign_clusters
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
-    assigned = assign_clusters(spark, sf_dir, embeddings)
+    assigned = assign_clusters(embeddings)
     per_cluster_label = (
         assigned.groupBy("cluster", "label")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -3605,11 +3561,11 @@ def q112_ivf_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q113_cell_stats_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.ivf import (
-        portable_cell_assignment_cached,
+        portable_cell_assignment,
     )
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
-    cells = portable_cell_assignment_cached(embeddings)
+    cells = portable_cell_assignment(embeddings)
     micro = F.floor(F.col("cell_sim") * 1000000 + F.lit(0.5)).cast("long")
     return cells.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -4148,13 +4104,13 @@ def q120_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q121_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.similarity import (
-        cosine_topk_bruteforce_cached,
+        cosine_topk_bruteforce,
         cosine_topk_lsh,
     )
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 10)
-    exact = cosine_topk_bruteforce_cached(embeddings, queries, k=5).select(
+    exact = cosine_topk_bruteforce(embeddings, queries, k=5).select(
         "query_id", "neighbor_id"
     )
     approx = (
@@ -4253,12 +4209,12 @@ def q121_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q122_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.ivf import cosine_topk_ivf_portable
     from salesanalytics_etl_spark.operators.similarity import (
-        cosine_topk_bruteforce_cached,
+        cosine_topk_bruteforce,
     )
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 10)
-    exact = cosine_topk_bruteforce_cached(embeddings, queries, k=5).select(
+    exact = cosine_topk_bruteforce(embeddings, queries, k=5).select(
         "query_id", "neighbor_id"
     )
     approx = (

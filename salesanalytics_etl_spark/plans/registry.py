@@ -121,41 +121,6 @@ _CHECK_FIRST = [
 ]
 
 
-# Queries whose bench FLOOR is a materialize-once memo HIT, not a cold
-# cost (the warm number is a fair account of a whole-surface session —
-# the memo IS the plan — but a cold-path regression in their shared
-# subtree shows only in the SWEEP column, where the first toucher pays
-# the build). tools/floor_diff.py reads this to compare those queries on
-# the sweep column and annotate them; keep in sync with the memoized
-# operators (dedup._BANDED_MEMO/_PAIRS_MEMO/_SRC_*_MEMO,
-# ivf._ASSIGNMENT_MEMO/_ANCHORS_MEMO, similarity._BRUTEFORCE_MEMO).
-MEMO_BACKED = frozenset(
-    {
-        "q25_minhash_neardup",
-        "q27_ann_cosine_topk",
-        "q28_ann_cosine_lsh",
-        "q34_ann_cosine_ivf",
-        "q109_minhash_lsh_replay",
-        "q112_ivf_replay",
-        "q113_cell_stats_replay",
-        "q116_lsh_bucket_audit",
-        "q121_ann_recall_audit",
-        "q122_ivf_recall_audit",
-        "q170_source_shingle_jaccard",
-        "q172_source_minhash_jaccard",
-        "q176_source_jaccard_sketch_error",
-        "q178_split_neardup_leakage",
-        # r13: q183 rides the _PAIRS_MEMO via minhash_near_dupes_portable
-        # (on its sampled frame), q188/q190 the _BRUTEFORCE_MEMO via the
-        # q27 ground-truth frame
-        "q183_sampled_neardup_replay",
-        "q196_sampled_neardup_recovery",
-        "q188_int8_quantization_audit",
-        "q190_int8_topk_recall",
-    }
-)
-
-
 def _ordered() -> dict[str, QuerySpec]:
     first = [n for n in _CHECK_FIRST if n in _REGISTRY]
     first_set = set(first)

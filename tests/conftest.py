@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 
@@ -47,7 +48,31 @@ _SLOW_TESTS = {
 }
 
 
+def _stale_slow_tests(config, items) -> list[str]:
+    """``_SLOW_TESTS`` nodeids that name no collected test although their
+    file was collected whole (a file selected by ``file::test`` or not
+    selected at all proves nothing) — a renamed or deleted test would
+    otherwise leave a dead entry while the real slow test runs."""
+    seen = {item.nodeid for item in items}
+    whole = [Path(a).resolve() for a in config.args if "::" not in a]
+
+    def file_collected_whole(nodeid: str) -> bool:
+        f = (config.rootpath / nodeid.split("::", 1)[0]).resolve()
+        return any(f == w or w in f.parents for w in whole)
+
+    return sorted(
+        n for n in _SLOW_TESTS if n not in seen and file_collected_whole(n)
+    )
+
+
+@pytest.hookimpl(tryfirst=True)  # before -k / --deselect shrink `items`
 def pytest_collection_modifyitems(config, items):
+    stale = _stale_slow_tests(config, items)
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py _SLOW_TESTS names tests that were not "
+            f"collected: {stale}"
+        )
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
         return
     skip = pytest.mark.skip(

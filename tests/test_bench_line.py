@@ -167,41 +167,3 @@ def test_recheck_floors_runs_flagged_queries(monkeypatch):
     assert set(out) == {"q01_real"}
     assert out["q01_real"] >= 0
     assert len(calls) == 3  # 1 warm + 2 timed
-
-
-def test_recheck_floors_cold_for_memo_backed(monkeypatch):
-    """Memo-backed flagged queries must have the memos cleared before
-    EVERY timed run (cold floors), plain queries never."""
-    import tools.close_round as cr
-    from salesanalytics_etl_spark.operators import memo as memo_mod
-    from salesanalytics_etl_spark.plans import registry
-
-    cleared = []
-    monkeypatch.setattr(
-        memo_mod, "clear_materialize_memos", lambda: cleared.append(1)
-    )
-    monkeypatch.setattr(
-        registry, "MEMO_BACKED", frozenset({"q_memo"}), raising=False
-    )
-
-    class _FakeDF:
-        def toPandas(self):
-            pass
-
-    import __spark_entry__ as entry
-
-    monkeypatch.setattr(
-        entry,
-        "queries",
-        lambda: {
-            "q_memo": lambda s, d: _FakeDF(),
-            "q_plain": lambda s, d: _FakeDF(),
-        },
-    )
-    import salesanalytics_etl_spark.session as sess
-
-    monkeypatch.setattr(sess, "get_spark", lambda **kw: object())
-    out = cr._recheck_floors(["q_memo", "q_plain"], n_runs=2)
-    assert set(out) == {"q_memo", "q_plain"}
-    # 1 pre-warm clear + 2 per-run clears, only for the memo-backed one
-    assert len(cleared) == 3

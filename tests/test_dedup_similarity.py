@@ -148,7 +148,7 @@ def test_ivf_topk_is_subset_of_exact(spark):
             for i, t in enumerate([0.0, 0.05, 0.1, 3.0, 3.05, 3.1])]
     vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
     q = vecs.filter(F.col("vec_id") == 0)
-    out = cosine_topk_ivf(spark, vecs, q, k=2, n_clusters=2, n_probe=1)
+    out = cosine_topk_ivf(vecs, q, k=2, n_clusters=2, n_probe=1)
     got = {r.neighbor_id for r in out.collect()}
     assert got == {1, 2}  # its own cluster's members, nearest first
 

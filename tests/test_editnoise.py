@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from salesanalytics_etl_spark.operators.editnoise import (
@@ -350,3 +351,31 @@ def test_reorder_simhash_audit_all_hamming_zero(spark):
     assert len(out) == 1, out
     assert out[0].hamming == 0
     assert out[0].n_chunk_hit == out[0].n_pairs
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"salt": "a'b"},
+        {"salt": 'a"b'},
+        {"salt": "a`b"},
+        {"salt": "a\\b"},
+        {"salt": "a;b"},
+        {"salt": "a--b"},
+        {"doc_id_expr": 'doc_id"'},
+        {"doc_id_expr": "`doc_id`"},
+        {"text_expr": 'concat(text, "x")'},
+        {"text_expr": "text` as t, `x"},
+    ],
+)
+def test_perturbed_text_rejects_unsafe_interpolation(spark, kwargs):
+    """Every string perturbed_text splices into its SQL expression is
+    refused when it carries a quote of any kind, a backslash, a
+    statement separator or a comment opener."""
+    from salesanalytics_etl_spark.operators.editnoise import perturbed_text
+
+    args = {"doc_id_expr": "doc_id", "text_expr": "text", **kwargs}
+    with pytest.raises(ValueError, match="unsafe for SQL interpolation"):
+        perturbed_text(**args)
+    # the same call with plain identifiers builds
+    perturbed_text("doc_id", "text")

@@ -1,132 +1,23 @@
-"""The three materialize-once memos (LSH banding, IVF cell assignment,
-exact-top-k ground truth) must be value-transparent: cached results
-byte-equal the uncached operator, keys distinguish different inputs,
-and eviction is FIFO (oldest first — dict insertion order, never
-popitem's LIFO, which would thrash the newest entry)."""
+"""No operator keeps a result beyond the query that built it: work shared
+inside one call is passed explicitly (the IVF anchor sample), a re-run
+after a table overwrite sees the new rows, and the SQL-string dot product
+the IVF assignment is built from equals the Column-built one bit for bit."""
 
 from __future__ import annotations
 
+import math
+import struct
+
+import pytest
 from pyspark.sql import functions as F
 
 
-def _docs(spark, texts):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id BIGINT, text STRING"
-    )
-
-
-def test_banded_memo_value_transparent_and_keyed(spark):
-    from salesanalytics_etl_spark.operators import dedup as D
-
-    df1 = _docs(spark, ["hello world one", "hello world two"])
-    df2 = _docs(spark, ["completely different corpus text"])
-    plain = sorted(map(tuple, D._portable_banded(df1).collect()))
-    cached = sorted(map(tuple, D._portable_banded_cached(df1).collect()))
-    assert cached == plain
-    # a second call returns the SAME checkpointed frame (no recompute)
-    again = D._portable_banded_cached(df1)
-    assert again is D._portable_banded_cached(df1)
-    # different input -> different entry, not a stale hit
-    other = sorted(map(tuple, D._portable_banded_cached(df2).collect()))
-    assert other != cached
-
-
-def test_assignment_memo_value_transparent(spark):
-    from salesanalytics_etl_spark.operators import ivf as I
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.5]) for i in range(20)],
-        "vec_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    plain = sorted(
-        map(tuple, I.portable_cell_assignment(emb, n_cells=4).collect())
-    )
-    cached = sorted(
-        map(tuple, I.portable_cell_assignment_cached(emb, n_cells=4).collect())
-    )
-    assert cached == plain
-    # n_cells participates in the key
-    other = I.portable_cell_assignment_cached(emb, n_cells=2)
-    assert other is not I.portable_cell_assignment_cached(emb, n_cells=4)
-
-
-def test_bruteforce_memo_value_transparent(spark):
-    from salesanalytics_etl_spark.operators import similarity as S
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3), 1.0]) for i in range(15)],
-        "vec_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    q = emb.filter(F.col("vec_id") < 2)
-    plain = sorted(
-        map(tuple, S.cosine_topk_bruteforce(emb, q, k=3).collect())
-    )
-    cached = sorted(
-        map(tuple, S.cosine_topk_bruteforce_cached(emb, q, k=3).collect())
-    )
-    assert cached == plain
-
-
-def test_clear_materialize_memos_invalidates_every_memo(spark):
-    """The r11 ADVICE invalidation hook: semanticHash keys are PLAN
-    identity, so in-session read-after-write pipelines must be able to
-    drop every cached frame in one call — and the next call re-derives
-    a FRESH entry rather than erroring or serving the dropped one."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators import ivf as I
-    from salesanalytics_etl_spark.operators import similarity as S
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
-    )
-
-    docs = _docs(spark, ["clear hook corpus alpha", "clear hook beta"])
-    emb = spark.createDataFrame(
-        [(i, [float(i), 2.0, 1.0]) for i in range(12)],
-        "vec_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    banded = D._portable_banded_cached(docs)
-    assigned = I.portable_cell_assignment_cached(emb, n_cells=3)
-    topk = S.cosine_topk_bruteforce_cached(
-        emb, emb.filter(F.col("vec_id") < 2), k=2
-    )
-    assert len(D._BANDED_MEMO) >= 1
-    assert len(I._ASSIGNMENT_MEMO) >= 1 and len(I._ANCHORS_MEMO) >= 1
-    assert len(S._BRUTEFORCE_MEMO) >= 1
-    dropped = clear_materialize_memos()
-    assert dropped >= 4
-    for memo in (
-        D._BANDED_MEMO,
-        I._ASSIGNMENT_MEMO,
-        I._ANCHORS_MEMO,
-        S._BRUTEFORCE_MEMO,
-    ):
-        assert len(memo) == 0
-    # post-clear calls re-derive fresh, value-identical entries
-    assert D._portable_banded_cached(docs) is not banded
-    assert I.portable_cell_assignment_cached(emb, n_cells=3) is not assigned
-    assert sorted(
-        map(tuple, I.portable_cell_assignment_cached(emb, n_cells=3).collect())
-    ) == sorted(map(tuple, assigned.collect()))
-    assert (
-        S.cosine_topk_bruteforce_cached(
-            emb, emb.filter(F.col("vec_id") < 2), k=2
-        )
-        is not topk
-    )
-    clear_materialize_memos()
-
-
 def test_cold_ivf_call_derives_anchors_once(spark, monkeypatch):
-    """The r11 ADVICE double-derivation: one cold cosine_topk_ivf_portable
-    call must scan the corpus for its anchor sample exactly ONCE — the
-    probe side and the memoized assignment share _portable_anchors_cached.
-    """
+    """One cosine_topk_ivf_portable call scans the corpus for its anchor
+    sample exactly ONCE: the probe side and the assignment argmax share
+    the collected rows (passed as ``anchor_rows``)."""
     from salesanalytics_etl_spark.operators import ivf as I
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
-    )
 
-    clear_materialize_memos()
     emb = spark.createDataFrame(
         [(i, [float(i % 4), float(i % 7), 1.0]) for i in range(24)],
         "vec_id BIGINT, embedding ARRAY<FLOAT>",
@@ -143,207 +34,104 @@ def test_cold_ivf_call_derives_anchors_once(spark, monkeypatch):
         emb, emb.filter(F.col("vec_id") < 2), k=3, n_cells=4
     )
     assert out.count() > 0
-    assert calls["n"] == 1  # cold path: one anchor derivation total
-    # a second consumer of the same corpus hits the anchor memo: no new
-    # derivation at all
-    I.portable_cell_assignment_cached(emb, n_cells=4).count()
     assert calls["n"] == 1
-    clear_materialize_memos()
 
 
-def test_memo_eviction_is_fifo_oldest_first(spark):
-    from salesanalytics_etl_spark.operators import dedup as D
-
-    D._BANDED_MEMO.clear()
-    frames = [_docs(spark, [f"corpus number {i} text"]) for i in range(6)]
-    handles = [D._portable_banded_cached(f) for f in frames]
-    assert len(D._BANDED_MEMO) == 4  # bounded
-    # the two OLDEST entries were evicted; the newest four survive
-    surviving = list(D._BANDED_MEMO.values())
-    assert handles[0] not in surviving and handles[1] not in surviving
-    for h in handles[2:]:
-        assert h in surviving
-    # an evicted input recomputes (fresh entry) without error
-    re0 = D._portable_banded_cached(frames[0])
-    assert re0 is not handles[0]
-    D._BANDED_MEMO.clear()
-
-
-def test_pair_and_source_matrix_memos_value_transparent(spark):
-    """The r12 composition memos: minhash_near_dupes_portable's verified
-    pairs (shared q109→q178) and the source-similarity matrices (shared
-    q170/q172→q176) must return byte-equal results cached vs fresh, and
-    the second call must be the SAME checkpointed frame."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
+def test_rerun_after_merge_sees_post_merge_data(spark, tmp_path):
+    """merge_upsert_table overwrites a table path in the same session;
+    re-running the near-dup and cell-assignment operators over a fresh
+    read of that path returns the post-merge results, not the pre-merge
+    ones (nothing is cached on plan identity, which a same-path
+    overwrite leaves unchanged)."""
+    from salesanalytics_etl_spark.operators.dedup import (
+        minhash_near_dupes_portable,
     )
-
-    clear_materialize_memos()
-    docs = spark.createDataFrame(
-        [
-            (1, "s1", "the quick brown fox jumps over the lazy dog"),
-            (2, "s1", "the quick brown fox jumps over the lazy dog!"),
-            (3, "s2", "a completely different document about spark"),
-        ],
-        "doc_id BIGINT, source STRING, text STRING",
-    )
-    p1 = D.minhash_near_dupes_portable(docs)
-    assert D.minhash_near_dupes_portable(docs) is p1  # memo hit
-    clear_materialize_memos()
-    p2 = D.minhash_near_dupes_portable(docs)
-    assert p2 is not p1
-    assert sorted(map(tuple, p2.collect())) == sorted(
-        map(tuple, p1.collect())
-    )
-    exact_plain = sorted(map(tuple, D.source_shingle_jaccard(docs).collect()))
-    exact_cached = sorted(
-        map(tuple, D.source_shingle_jaccard_cached(docs).collect())
-    )
-    assert exact_cached == exact_plain
-    assert D.source_shingle_jaccard_cached(
-        docs
-    ) is D.source_shingle_jaccard_cached(docs)
-    sk_plain = sorted(map(tuple, D.source_minhash_jaccard(docs).collect()))
-    sk_cached = sorted(
-        map(tuple, D.source_minhash_jaccard_cached(docs).collect())
-    )
-    assert sk_cached == sk_plain
-    clear_materialize_memos()
-
-
-def test_merge_auto_invalidates_memos_over_mutated_table(spark, tmp_path):
-    """The r12 ADVICE hazard end-to-end: a memoized operator scans a
-    parquet table, merge_upsert_table overwrites it IN the same session,
-    and the next memoized call must see the post-merge data — the
-    framework's own mutator invalidates, no manual hook needed. The
-    semanticHash key cannot distinguish the re-read (same path, same
-    plan), so without auto-invalidation this test serves the stale frame."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators.memo import clear_materialize_memos
+    from salesanalytics_etl_spark.operators.ivf import portable_cell_assignment
     from salesanalytics_etl_spark.operators.upsert import merge_upsert_table
 
-    clear_materialize_memos()
-    path = str(tmp_path / "docs_tbl")
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    docs = str(tmp_path / "docs_tbl")
     spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")],
+        [(1, text), (3, "iota kappa lambda mu nu xi omicron pi")],
         "doc_id BIGINT, text STRING",
-    ).write.parquet(path)
-    before = D._portable_banded_cached(spark.read.parquet(path))
-    assert {r.doc_id for r in before.collect()} == {1}
-    batch = spark.createDataFrame(
-        [(2, "eta theta iota kappa lambda mu")], "doc_id BIGINT, text STRING"
-    )
-    merge_upsert_table(spark, path, batch, ["doc_id"])
-    after = D._portable_banded_cached(spark.read.parquet(path))
-    assert after is not before  # entry was dropped, not served stale
-    assert {r.doc_id for r in after.collect()} == {1, 2}  # post-merge data
-    clear_materialize_memos()
-
-
-def test_merge_into_unrelated_path_keeps_memo_entries(spark, tmp_path):
-    """The invalidation is SCOPED by recorded sources: merging into a
-    staging table must not cold-restart memoized operators over OTHER
-    tables (the whole point of recording sources at set time)."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators.memo import clear_materialize_memos
-    from salesanalytics_etl_spark.operators.upsert import merge_upsert_table
-
-    clear_materialize_memos()
-    docs_path = str(tmp_path / "docs_keep")
-    spark.createDataFrame(
-        [(1, "nu xi omicron pi rho sigma")], "doc_id BIGINT, text STRING"
-    ).write.parquet(docs_path)
-    kept = D._portable_banded_cached(spark.read.parquet(docs_path))
-    other = str(tmp_path / "other_tbl")
+    ).write.parquet(docs)
+    assert minhash_near_dupes_portable(spark.read.parquet(docs)).count() == 0
     merge_upsert_table(
         spark,
-        other,
-        spark.createDataFrame([(1, "x")], "k BIGINT, v STRING"),
-        ["k"],
+        docs,
+        spark.createDataFrame([(2, text)], "doc_id BIGINT, text STRING"),
+        ["doc_id"],
     )
-    merge_upsert_table(  # second merge exercises the swap path too
+    pairs = minhash_near_dupes_portable(spark.read.parquet(docs)).collect()
+    assert [(r.doc_a, r.doc_b, r.jaccard) for r in pairs] == [(1, 2, 1.0)]
+
+    emb = str(tmp_path / "emb_tbl")
+    spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id BIGINT, embedding ARRAY<FLOAT>",
+    ).write.parquet(emb)
+    before = portable_cell_assignment(spark.read.parquet(emb), n_cells=2)
+    assert {r.cid for r in before.collect()} == {1, 2}
+    merge_upsert_table(
         spark,
-        other,
-        spark.createDataFrame([(2, "y")], "k BIGINT, v STRING"),
-        ["k"],
+        emb,
+        spark.createDataFrame(
+            [(3, [1.0, 0.1])], "vec_id BIGINT, embedding ARRAY<FLOAT>"
+        ),
+        ["vec_id"],
     )
-    assert D._portable_banded_cached(spark.read.parquet(docs_path)) is kept
-    clear_materialize_memos()
+    after = portable_cell_assignment(spark.read.parquet(emb), n_cells=2)
+    assert {r.cid for r in after.collect()} == {1, 2, 3}
 
 
-def test_unknown_source_memo_entries_drop_fail_safe(spark):
-    """Entries whose sources could not be recorded (in-memory frames:
-    inputFiles() is empty) must be dropped by ANY path invalidation —
-    unknown provenance fails safe to a recompute, never a stale hit."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
-        invalidate_memos_for_path,
-    )
-
-    clear_materialize_memos()
-    docs = _docs(spark, ["tau upsilon phi chi psi omega"])
-    h = D._portable_banded_cached(docs)
-    assert invalidate_memos_for_path("/nowhere/in/particular") >= 1
-    assert D._portable_banded_cached(docs) is not h
-    clear_materialize_memos()
+def _bits(x):
+    return "nan" if x is not None and math.isnan(x) else struct.pack(">d", x)
 
 
-def test_canon_uri_matches_uri_and_bare_forms():
-    """URI-addressed sources (hdfs/s3a/file) and mutator-supplied bare
-    or URI paths canonicalize to the same key exactly when they name
-    the same object — the non-local route the r13 review found never
-    matched under the old string-prefix form."""
-    from salesanalytics_etl_spark.operators.memo import _canon_uri
-
-    assert _canon_uri("file:/a/b") == ("file", "", "/a/b")
-    assert _canon_uri("file:///a/b/") == ("file", "", "/a/b")
-    assert _canon_uri("/a/b") == ("file", "", "/a/b")
-    assert _canon_uri("hdfs://nn:8020/tbl/part-0.parquet") == (
-        "hdfs", "nn:8020", "/tbl/part-0.parquet")
-    assert _canon_uri("s3a://bucket/tbl") == ("s3a", "bucket", "/tbl")
-    # authority must participate: same path on another cluster differs
-    assert _canon_uri("hdfs://other:8020/tbl") != _canon_uri(
-        "hdfs://nn:8020/tbl")
-    # bare path never collides with a scheme'd one
-    assert _canon_uri("s3a://bucket/tbl") != _canon_uri("/bucket/tbl")
-    # URI hosts are case-insensitive — including bracketed IPv6
-    # literals, whose colons defeated the old partition(':') fold
-    # (r14 ADVICE): upper/lower forms of one address must match, the
-    # port must stay verbatim, and userinfo must survive untouched
-    assert _canon_uri("hdfs://NN:8020/t") == _canon_uri("hdfs://nn:8020/t")
-    assert _canon_uri("hdfs://[2001:DB8::1]:8020/t") == _canon_uri(
-        "hdfs://[2001:db8::1]:8020/t")
-    assert _canon_uri("hdfs://[2001:DB8::1]:8020/t") == (
-        "hdfs", "[2001:db8::1]:8020", "/t")
-    assert _canon_uri("hdfs://[2001:DB8::1]/t") == (
-        "hdfs", "[2001:db8::1]", "/t")
-    assert _canon_uri("s3a://User@[2001:DB8::2]:9000/t") == (
-        "s3a", "User@[2001:db8::2]:9000", "/t")
-
-
-def test_invalidate_memos_for_uri_path():
-    """A memo whose sources are object-store URIs is dropped when the
-    mutator passes the same URI table path, and survives other tables."""
-    from salesanalytics_etl_spark.operators import memo as memo_mod
-    from salesanalytics_etl_spark.operators.memo import (
-        invalidate_memos_for_path,
-        register_memo,
+@pytest.mark.parametrize(
+    "anchor",
+    [
+        # negative, double-subnormal, +/-0.0, huge and float32-subnormal
+        # components
+        [-1.5, 5e-324, -0.0, 0.0, 1e300, 1.401298464324817e-45],
+        [-2.2250738585072014e-308, -5e-324, 0.1, -0.0],
+        # non-finite anchor components take the double('...') literal path
+        [float("nan"), 1.0, -0.0, 2.0, 3.0, 4.0],
+        [float("inf"), -1.0, 0.0, 1.0],
+        [float("-inf"), 1.0, 1.0, -0.0],
+    ],
+)
+def test_sql_string_dot_matches_column_dot_bit_for_bit(spark, anchor):
+    from salesanalytics_etl_spark.operators.similarity import (
+        _dot,
+        _dot_literal_sql,
     )
 
-    m = register_memo({})
-    try:
-        m["k1"] = "frame1"
-        m["k2"] = "frame2"
-        memo_mod._SOURCES[id(m)] = {
-            "k1": ("s3a://bucket/tbl/part-00000.parquet",),
-            "k2": ("s3a://bucket/other/part-00000.parquet",),
-        }
-        dropped = invalidate_memos_for_path("s3a://bucket/tbl")
-        assert "k1" not in m and "k2" in m
-        assert dropped >= 1
-    finally:
-        m.clear()
-        memo_mod._SOURCES.pop(id(m), None)
-        memo_mod._MEMOS.remove(m)
+    dim = len(anchor)
+    comps = [-3.25, -1e-45, -0.0, 0.0, 1e-40, 7.0, 1e38]
+    rows = [
+        (i, [comps[(i + d) % len(comps)] for d in range(dim)])
+        for i in range(len(comps))
+    ]
+    df = spark.createDataFrame(rows, "id BIGINT, v ARRAY<FLOAT>")
+    got = df.select(
+        "id",
+        F.expr(_dot_literal_sql("v", anchor)).alias("sql"),
+        _dot(F.col("v"), F.array(*[F.lit(x) for x in anchor])).alias("col"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert _bits(r.sql) == _bits(r.col), (r.id, r.sql, r.col)
+
+
+def test_sql_double_literals_round_trip(spark):
+    from salesanalytics_etl_spark.operators.similarity import _sql_double
+
+    vals = [-0.0, 0.0, 5e-324, -5e-324, 0.1, -1.5, 1e300,
+            1.7976931348623157e308, float("nan"), float("inf"), float("-inf")]
+    df = spark.range(1).select(
+        *[F.expr(_sql_double(x)).alias(f"c{i}") for i, x in enumerate(vals)]
+    )
+    assert {f.dataType.simpleString() for f in df.schema} == {"double"}
+    row = df.first()
+    assert [_bits(v) for v in row] == [_bits(x) for x in vals]

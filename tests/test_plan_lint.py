@@ -321,12 +321,11 @@ def test_plan_pins(spark, sf_dir, name):
 def test_q113_assignment_is_map_side(spark, sf_dir):
     """Quantizer assignment must be literal-anchor argmax inside ONE
     projection over ONE scan — the earlier join+window form shuffled
-    n_cells × corpus rows through a row_number exchange. Since r11 the
-    registered query consumes the assignment through a memoized
-    localCheckpoint (the scan is hidden behind an RDD scan there), so
-    the shape is pinned on the UNDERLYING operator, and the query plan
-    is pinned to its one remaining exchange (the ≤ n_cells-group stats
-    aggregate)."""
+    n_cells × corpus rows through a row_number exchange. The shape is
+    pinned on the operator, and the registered query (which reads the
+    assignment directly, no checkpoint in between) is pinned to one
+    corpus scan and its one remaining exchange (the ≤ n_cells-group
+    stats aggregate)."""
     from salesanalytics_etl_spark.operators.ivf import (
         portable_cell_assignment,
     )
@@ -338,6 +337,7 @@ def test_q113_assignment_is_map_side(spark, sf_dir):
     df = all_queries()["q113_cell_stats_replay"](spark, sf_dir)
     qtree = _formatted_plan(df).split("\n\n")[0]
     assert qtree.count("Exchange") == 1, "only the cell-stats agg may shuffle"
+    assert qtree.count("Scan parquet") == 1, "q113 scans the corpus once"
 
 
 def test_q115_is_map_only(spark, sf_dir):
